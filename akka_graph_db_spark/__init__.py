@@ -14,9 +14,11 @@ Design (SURVEY.md §1.4): a graph is a pair of DataFrames
 ``nodes(id BIGINT, label STRING, props MAP<STRING,STRING>, <promoted cols>)``
 and ``edges(id, label, src, dst, props, <promoted cols>)``; property values
 are canonical-JSON fragments (two-tier layout: JSON map for full fidelity,
-promoted typed columns for pushdown-friendly hot keys). Mutations are
-copy-on-write snapshots; traversal is a driver-side frontier-join loop
-(Pregel pattern); everything else is a single Catalyst plan.
+promoted typed columns for pushdown-friendly hot keys). Batch mutations
+are copy-on-write snapshots; the ``GraphDB`` facade keeps single-row writes
+in a driver-side overlay over an immutable base; traversal is a driver-side
+frontier-join loop (Pregel pattern); everything else is a single Catalyst
+plan.
 """
 
 from akka_graph_db_spark.api import GraphDB

@@ -8,10 +8,25 @@ operators, so the single-object form is just a one-row batch and large-batch
 forms stay available (``*_batch`` / the operators module) for real
 pipelines.
 
-Mutation model: copy-on-write — the facade holds the CURRENT snapshot and
-swaps it on each mutation (the reference mutates Neo4j in place; here the
-graph value is immutable and the handle advances, which is also what makes
-``history``/``save`` trivially consistent).
+Mutation model: a driver-side write overlay on an immutable base
+snapshot. Single-row writes record their effects in Python — the full
+live rows of added or updated nodes and edges, the base ids those rows
+hide, and the removed node ids whose incident base edges the cascade
+hides — instead of stacking one crud join per write onto the plan.
+``graph`` composes them into one fixed-shape plan per frame,
+``base.where(NOT id IN hidden [AND NOT src/dst IN removed]) UNION live``,
+with the live rows as an inline VALUES table that Catalyst evaluates at
+planning time: a read after N writes runs the same jobs as a read on the
+fresh snapshot, and ``id = x`` still reaches a file-backed base's
+``PushedFilters``. ``add_node`` given an id, ``remove_node`` and
+``remove_edge`` run no Spark job; ``add_edge`` checks its endpoints and
+``update_*`` fetch the current base row with one id-pushed point read. Past
+``_OVERLAY_MAX_ROWS`` entries the composed graph is localCheckpointed
+into a new base. Batch and predicate mutations (``*_batch``,
+``remove_nodes``) run ``operators.crud`` on the composed graph, and the
+result becomes the new base. The crud chain is the semantic reference
+(the reference mutates Neo4j in place; here the base never changes and
+the handle advances). A non-empty overlay exposes the core columns only.
 
 Id allocation: ``add_node``/``add_edge`` auto-assign ``max(id)+1`` when no
 id is given — a driver-side max() action, fine for interactive use;
@@ -21,20 +36,125 @@ see sources/tpch.py).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from akka_graph_db_spark.model import PropertyGraph
+from akka_graph_db_spark.model import (
+    EDGE_CORE_COLS,
+    NODE_CORE_COLS,
+    PropertyGraph,
+)
 from akka_graph_db_spark.operators import analytics, crud, scan, traverse
+
+# Overlay entries (live rows plus hidden and removed ids) past which the
+# composed graph is folded into a localCheckpoint base — the cadence idea
+# of StreamingGraphFold.checkpoint_every: the per-read cost of planning
+# the inline rows and NOT IN lists stays bounded.
+_OVERLAY_MAX_ROWS = 1000
+
+
+def _sql_value(col: str, v) -> str:
+    """One core-column value as a SQL literal. Strings travel as hex
+    binary literals cast to STRING, so there is no quoting to get wrong;
+    the props map travels as JSON text."""
+    if col == "props":
+        text = json.dumps(v).encode().hex()
+        return f"from_json(CAST(X'{text}' AS STRING), 'map<string,string>')"
+    typ = "STRING" if col == "label" else "BIGINT"
+    if v is None:
+        return f"CAST(NULL AS {typ})"
+    if typ == "STRING":
+        return f"CAST(X'{str(v).encode().hex()}' AS STRING)"
+    return f"CAST({int(v)} AS BIGINT)"
+
+
+def _local_rows(spark: SparkSession, cols: Sequence[str], rows) -> DataFrame:
+    """``rows`` (values in ``cols`` order) as an inline VALUES table.
+
+    The analyzer turns it into a LocalRelation, so Catalyst evaluates a
+    read's filters over it at planning time and drops the branch when no
+    row matches — ``createDataFrame`` would be an RDD scan that runs tasks
+    on every read. A trailing all-NULL row, filtered out, keeps the plan's
+    shape the same for any number of rows, none included.
+    """
+    tuples = (
+        f"({', '.join(_sql_value(c, v) for c, v in zip(cols, row))})"
+        for row in [*rows, [None] * len(cols)]
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS t({', '.join(cols)})"
+        " WHERE id IS NOT NULL"
+    )
+
+
+def _merge(current, changes: Mapping) -> dict:
+    """``crud._merge_props`` on a driver-side row: the change wins, a NULL
+    map merges as empty, and every ``"null"`` fragment (a delete marker or
+    a stored JSON null) drops its key."""
+    merged = {**(current or {}), **changes}
+    return {k: v for k, v in merged.items() if v is not None and v != "null"}
 
 
 class GraphDB:
-    """A handle over an evolving PropertyGraph snapshot."""
+    """A handle over an evolving PropertyGraph: an immutable base snapshot
+    plus a driver-side overlay of the single-row writes since."""
 
     def __init__(self, graph: PropertyGraph):
-        self.graph = graph
+        self._rebase(graph)
+
+    def _rebase(self, graph: PropertyGraph) -> None:
+        self._base = graph
+        self._composed: PropertyGraph | None = graph
+        self._live_nodes: list[list] = []  # [id, label, props]
+        self._live_edges: list[list] = []  # [id, label, src, dst, props]
+        self._hidden_nodes: set[int] = set()  # base node ids not visible
+        self._hidden_edges: set[int] = set()  # base edge ids not visible
+        self._removed: set[int] = set()  # node ids whose base edges cascade
+
+    @property
+    def graph(self) -> PropertyGraph:
+        """The current snapshot: the base untouched while the overlay is
+        empty, else base and overlay composed (built once per write)."""
+        if self._composed is None:
+            self._composed = self._compose()
+        return self._composed
+
+    def _compose(self) -> PropertyGraph:
+        spark = self._base.nodes.sparkSession
+        removed = sorted(self._removed)
+        nodes = self._base.nodes.select(*NODE_CORE_COLS).where(
+            ~F.col("id").isin(sorted(self._hidden_nodes))
+        )
+        edges = self._base.edges.select(*EDGE_CORE_COLS).where(
+            ~F.col("id").isin(sorted(self._hidden_edges))
+            & ~F.col("src").isin(removed)
+            & ~F.col("dst").isin(removed)
+        )
+        return PropertyGraph(
+            nodes=nodes.unionByName(
+                _local_rows(spark, NODE_CORE_COLS, self._live_nodes)
+            ),
+            edges=edges.unionByName(
+                _local_rows(spark, EDGE_CORE_COLS, self._live_edges)
+            ),
+        )
+
+    def _wrote(self) -> None:
+        self._composed = None
+        size = (
+            len(self._live_nodes) + len(self._live_edges)
+            + len(self._hidden_nodes) + len(self._hidden_edges)
+            + len(self._removed)
+        )
+        if size > _OVERLAY_MAX_ROWS:
+            g = self.graph
+            self._rebase(PropertyGraph(
+                g.nodes.localCheckpoint(eager=True),
+                g.edges.localCheckpoint(eager=True),
+            ))
 
     # -- construction -------------------------------------------------------
 
@@ -81,9 +201,12 @@ class GraphDB:
     def add_node(
         self, label: str, data: Mapping | None = None, node_id: int | None = None
     ) -> int:
-        """addNode (Neo4jGraph.scala:156-176). Returns the node id."""
-        nid = self._next_id(self.graph.nodes) if node_id is None else node_id
-        self.graph = crud.add_nodes(self.graph, [(nid, label, data or {})])
+        """addNode (Neo4jGraph.scala:156-176). Returns the node id; an
+        existing id gets a second row, as the crud union does."""
+        props = dict(crud._py_props_to_map(data))
+        nid = self._next_id(self.graph.nodes) if node_id is None else int(node_id)
+        self._live_nodes.append([nid, label, props])
+        self._wrote()
         return nid
 
     def add_edge(
@@ -94,45 +217,85 @@ class GraphDB:
         data: Mapping | None = None,
         edge_id: int | None = None,
     ) -> int:
-        """addEdge with endpoint validation (Neo4jGraph.scala:178-210)."""
-        eid = self._next_id(self.graph.edges) if edge_id is None else edge_id
-        self.graph = crud.add_edges(
-            self.graph, [(eid, label, src, dst, data or {})]
-        )
+        """addEdge (Neo4jGraph.scala:178-210): both endpoints must exist
+        (the reference MATCHes them before CREATE), else ``ValueError``
+        naming the missing id and no edge is added."""
+        props = dict(crud._py_props_to_map(data))
+        src, dst = int(src), int(dst)
+        missing = {src, dst} - {r[0] for r in self._live_nodes}
+        probe = sorted(missing - self._hidden_nodes)
+        if probe:
+            found = self._base.nodes.where(F.col("id").isin(probe))
+            missing -= {r["id"] for r in found.select("id").collect()}
+        if missing:
+            raise ValueError(
+                f"add_edge: no node with id {', '.join(map(str, sorted(missing)))}"
+            )
+        eid = self._next_id(self.graph.edges) if edge_id is None else int(edge_id)
+        self._live_edges.append([eid, label, src, dst, props])
+        self._wrote()
         return eid
 
     def update_node(self, node_id: int, changes: Mapping) -> None:
-        """updateNode: merge; None value deletes the key (:442-467)."""
-        self.graph = crud.update_nodes(self.graph, {node_id: changes})
+        """updateNode: merge into every row with the id; None value deletes
+        the key (:442-467)."""
+        self._update(self._base.nodes, NODE_CORE_COLS, int(node_id), changes,
+                     self._hidden_nodes, self._live_nodes)
 
     def update_edge(self, edge_id: int, changes: Mapping) -> None:
-        """updateEdge (:469-490)."""
-        self.graph = crud.update_edges(self.graph, {edge_id: changes})
+        """updateEdge (:469-490); a no-op on an edge a cascade removed."""
+        self._update(self._base.edges, EDGE_CORE_COLS, int(edge_id), changes,
+                     self._hidden_edges, self._live_edges)
+
+    def _update(self, frame, cols, ident, changes, hidden, live) -> None:
+        """Merge ``changes`` into every live row with id ``ident``, first
+        moving that id's base rows into the overlay with one id-pushed
+        point read; an edge the remove_node cascade hides stays hidden."""
+        ch = dict(crud._py_props_to_map(changes, keep_nulls=True))
+        if ident not in hidden:
+            for r in frame.where(F.col("id") == ident).select(*cols).collect():
+                if "src" not in cols or not {r["src"], r["dst"]} & self._removed:
+                    live.append(list(r))
+            hidden.add(ident)
+        for row in live:
+            if row[0] == ident:
+                row[-1] = _merge(row[-1], ch)
+        self._wrote()
 
     def remove_node(self, node_id: int) -> None:
         """removeNode — CASCADES to incident edges (:406-413)."""
-        self.graph = crud.remove_nodes_by_id(self.graph, [node_id])
+        nid = int(node_id)
+        self._hidden_nodes.add(nid)
+        self._removed.add(nid)
+        self._live_nodes = [r for r in self._live_nodes if r[0] != nid]
+        self._live_edges = [
+            r for r in self._live_edges if nid not in (r[2], r[3])
+        ]
+        self._wrote()
 
     def remove_nodes(
         self, label: str | None = None, data: Mapping | None = None
     ) -> None:
         """removeNodes by predicate; label=None matches ALL labels (:415-431)."""
-        self.graph = crud.remove_nodes(self.graph, label, data)
+        self._rebase(crud.remove_nodes(self.graph, label, data))
 
     def remove_edge(self, edge_id: int) -> None:
         """removeEdge (:433-440)."""
-        self.graph = crud.remove_edges_by_id(self.graph, [edge_id])
+        eid = int(edge_id)
+        self._hidden_edges.add(eid)
+        self._live_edges = [r for r in self._live_edges if r[0] != eid]
+        self._wrote()
 
     # -- batch mutation passthrough -----------------------------------------
 
     def add_nodes_batch(self, nodes) -> None:
-        self.graph = crud.add_nodes(self.graph, nodes)
+        self._rebase(crud.add_nodes(self.graph, nodes))
 
     def add_edges_batch(self, edges, validate_endpoints: bool = True) -> None:
-        self.graph = crud.add_edges(self.graph, edges, validate_endpoints)
+        self._rebase(crud.add_edges(self.graph, edges, validate_endpoints))
 
     def update_nodes_batch(self, changes) -> None:
-        self.graph = crud.update_nodes(self.graph, changes)
+        self._rebase(crud.update_nodes(self.graph, changes))
 
     # -- lookups & scans (reference §2.2-2.3) -------------------------------
 

@@ -123,12 +123,15 @@ def props_map(*pairs: tuple[str, Column]) -> Column:
 
 def encode_py_value(v) -> str | None:
     """Python value → canonical JSON fragment (driver-side, for small
-    mutation batches and predicates)."""
+    mutation batches and predicates). NaN and ±inf have no JSON form and
+    raise ``ValueError``."""
     import json
 
     if v is None:
         return None  # caller decides: absent vs JSON null ("null")
-    return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+    return json.dumps(
+        v, separators=(",", ":"), ensure_ascii=False, allow_nan=False
+    )
 
 
 # ---------------------------------------------------------------------------

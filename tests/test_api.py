@@ -115,3 +115,18 @@ def test_facade_mis_closure_node2vec(micro):
     walks = db.node2vec_walks(n_seeds=2, n_steps=2,
                               edge_labels=["knows"]).collect()
     assert len(walks) == 2 and all(r["step_2"] is not None for r in walks)
+
+
+def test_add_edge_missing_endpoint_raises(micro):
+    import pytest
+
+    db = GraphDB(micro)
+    with pytest.raises(ValueError, match="999"):
+        db.add_edge("knows", 1, 999, edge_id=500)
+    db.remove_node(2)
+    with pytest.raises(ValueError, match="id 2"):
+        db.add_edge("knows", 2, 1, edge_id=501)
+    assert db.get_edge(500) is None and db.get_edge(501) is None
+    db.add_node("person", node_id=999)
+    assert db.add_edge("knows", 1, 999, edge_id=500) == 500
+    assert db.get_edge(500)["dst_label"] == "person"

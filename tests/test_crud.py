@@ -145,3 +145,22 @@ def test_generator_ids_materialized_once(spark, micro):
     assert 7 not in ids(g.nodes)
     g2 = crud.remove_edges_by_id(micro, (i for i in [114]))
     assert 114 not in ids(g2.edges)
+
+
+def test_non_finite_float_props_raise(micro):
+    import pytest
+
+    from akka_graph_db_spark.api import GraphDB
+    from akka_graph_db_spark.model import encode_py_value
+
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            encode_py_value(bad)
+        with pytest.raises(ValueError):
+            crud.add_nodes(micro, [(50, "t", {"x": bad})])
+        db = GraphDB(micro)
+        with pytest.raises(ValueError):
+            db.add_node("t", {"x": bad}, node_id=50)
+        with pytest.raises(ValueError):
+            db.update_node(1, {"x": bad})
+        assert db.graph is micro  # nothing was written

@@ -109,3 +109,55 @@ def test_scan_prunes_columns(spark):
     sched = plan.split("ReadSchema")[1][:200]
     assert "doc_id" in sched and "lang" in sched
     assert "text" not in sched  # the wide column stays unread
+
+
+def _facade_writes(db, n):
+    """``n`` single-row facade writes cycling through the four write kinds
+    (sf0.001 ids: customers 2_000_001.., orders 5_000_001..)."""
+    for i in range(n):
+        kind = i % 4
+        if kind == 0:
+            db.add_node("customer", {"name": f"new{i}"}, node_id=2_900_000 + i)
+        elif kind == 1:
+            db.add_edge("placed", 2_900_000 + i - 1, 5_000_001,
+                        edge_id=139_000_000 + i)
+        elif kind == 2:
+            db.update_node(2_000_001 + i, {"acctbal": i})
+        else:
+            db.remove_node(2_000_100 + i)
+
+
+def _analyzed_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString().splitlines())
+
+
+def test_facade_writes_keep_plan_shape(spark, pg, monkeypatch):
+    """A read after N facade writes plans the same frames as after two:
+    the write overlay composes one fixed-shape plan, it does not stack a
+    join per write; the id still reaches the parquet scan; and folding
+    the overlay into a checkpoint leaves every answer unchanged."""
+    from akka_graph_db_spark import api
+    from akka_graph_db_spark.operators import scan
+
+    two, twelve = api.GraphDB(pg), api.GraphDB(pg)
+    _facade_writes(two, 2)
+    _facade_writes(twelve, 12)
+    for frame in ("nodes", "edges"):
+        assert _analyzed_lines(getattr(two.graph, frame)) == _analyzed_lines(
+            getattr(twelve.graph, frame))
+
+    plan = formatted_plan(scan.get_node(twelve.graph, 2_000_007))
+    assert "id" in plan.split("PushedFilters")[1][:200]
+    assert twelve.get_node(2_000_007)["props"]["mktsegment"] == '"HOUSEHOLD"'
+
+    monkeypatch.setattr(api, "_OVERLAY_MAX_ROWS", 4)
+    folded = api.GraphDB(pg)
+    _facade_writes(folded, 12)
+    assert "LogicalRDD" in folded.graph.nodes._jdf.queryExecution().analyzed().toString()
+    for nid in (2_900_000, 2_900_008, 2_000_003, 2_000_011, 2_000_103):
+        assert folded.get_node(nid) == twelve.get_node(nid)
+    for eid in (139_000_001, 139_000_005, 139_000_009):
+        assert folded.get_edge(eid) == twelve.get_edge(eid)
+    for frame in ("nodes", "edges"):
+        assert getattr(folded.graph, frame).count() == getattr(
+            twelve.graph, frame).count()

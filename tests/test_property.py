@@ -2,9 +2,14 @@
 by hypothesis; few examples because every example is a Spark job."""
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
-from akka_graph_db_spark.model import PropertyGraph, prop_str
+from akka_graph_db_spark.model import (
+    EDGE_CORE_COLS,
+    NODE_CORE_COLS,
+    PropertyGraph,
+    prop_str,
+)
 from akka_graph_db_spark.operators import crud, scan, traverse
 
 NODE_IDS = list(range(1, 7))
@@ -276,3 +281,95 @@ def test_containment_join_lossless(token_lists, t):
         if a != b and len(sets[a] & sets[b]) / len(sets[a]) >= t
     )
     assert got == want
+
+
+# -- GraphDB write overlay vs the operators.crud chain ----------------------
+
+_OV_NODES = st.sampled_from([1, 2, 3, 6, 8, 11, 12])  # 11, 12 start absent
+_OV_EDGES = st.sampled_from([100, 102, 105, 107, 113, 200, 201])
+_OV_PROPS = st.dictionaries(
+    st.sampled_from(["age", "name", "x"]),
+    st.one_of(st.none(), st.integers(0, 3), st.sampled_from(["s", "t"])),
+    max_size=2,
+)
+overlay_ops_strategy = st.lists(
+    st.one_of(
+        st.tuples(st.just("add_node"), _OV_NODES,
+                  st.sampled_from(["person", "city"]), _OV_PROPS),
+        st.tuples(st.just("add_edge"), _OV_EDGES, _OV_NODES, _OV_NODES,
+                  _OV_PROPS),
+        st.tuples(st.just("update_node"), _OV_NODES, _OV_PROPS),
+        st.tuples(st.just("update_edge"), _OV_EDGES, _OV_PROPS),
+        st.tuples(st.just("remove_node"), _OV_NODES),
+        st.tuples(st.just("remove_edge"), _OV_EDGES),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+def _rows(df, cols):
+    """Sorted rows; ``props`` (the last core column) as sorted items,
+    with NULL kept apart from an empty map."""
+    return sorted(
+        (*(r[c] for c in cols[:-1]), r["props"] is None,
+         sorted((r["props"] or {}).items()))
+        for r in df.select(*cols).collect()
+    )
+
+
+@settings(max_examples=3, deadline=None)
+@given(ops=overlay_ops_strategy)
+@example(ops=[
+    ("add_node", 11, "person", {"x": None}),  # stored JSON null, new id
+    ("add_node", 2, "person", {"age": 1}),  # duplicate id: second row
+    ("update_node", 2, {"name": None, "age": 3}),  # merges into both rows
+    ("update_node", 11, {"age": 1}),  # overlay row; drops the stored null
+    ("add_edge", 200, 11, 3, {"w": 1}),
+    ("update_edge", 200, {"w": None}),  # overlay edge, None deletes
+    ("update_edge", 100, {"since": 1}),  # base edge moves to the overlay
+    ("remove_node", 1),  # cascades base and overlay edges
+    ("update_edge", 105, {"x": 1}),  # cascaded edge: no-op
+    ("add_node", 1, "person", {}),  # re-added id, without its old edges
+    ("add_edge", 201, 1, 12, {}),  # endpoint 12 missing
+    ("add_edge", 201, 1, 2, {}),
+    ("remove_edge", 113),
+    ("remove_node", 11),  # cascades overlay edge 200
+])
+def test_facade_overlay_matches_crud_chain(micro, ops):
+    """Every facade write sequence leaves ``db.graph`` equal, row for
+    row, to the same calls folded through ``operators.crud``; an edge
+    the crud chain drops for a missing endpoint raises instead."""
+    from akka_graph_db_spark.api import GraphDB
+
+    db, ref = GraphDB(micro), micro
+    for op in ops:
+        kind, args = op[0], op[1:]
+        if kind == "add_node":
+            ref = crud.add_nodes(ref, [(args[0], args[1], args[2])])
+            db.add_node(args[1], args[2], node_id=args[0])
+        elif kind == "add_edge":
+            eid, src, dst, props = args
+            ref_ids = {r["id"] for r in ref.nodes.select("id").collect()}
+            ref = crud.add_edges(ref, [(eid, "e", src, dst, props)])
+            if {src, dst} <= ref_ids:
+                db.add_edge("e", src, dst, props, edge_id=eid)
+            else:
+                with pytest.raises(ValueError):
+                    db.add_edge("e", src, dst, props, edge_id=eid)
+        elif kind == "update_node":
+            ref = crud.update_nodes(ref, {args[0]: args[1]})
+            db.update_node(args[0], args[1])
+        elif kind == "update_edge":
+            ref = crud.update_edges(ref, {args[0]: args[1]})
+            db.update_edge(args[0], args[1])
+        elif kind == "remove_node":
+            ref = crud.remove_nodes_by_id(ref, [args[0]])
+            db.remove_node(args[0])
+        else:
+            ref = crud.remove_edges_by_id(ref, [args[0]])
+            db.remove_edge(args[0])
+        assert _rows(db.graph.nodes, NODE_CORE_COLS) == _rows(
+            ref.nodes, NODE_CORE_COLS), op
+        assert _rows(db.graph.edges, EDGE_CORE_COLS) == _rows(
+            ref.edges, EDGE_CORE_COLS), op
